@@ -22,7 +22,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from feature_store_healthcare_spark.operators.similarity import _col_sql
+from feature_store_healthcare_spark.sqltext import col, ident, lit
 
 
 def _utcnow() -> datetime:
@@ -139,7 +139,7 @@ def incremental_agg(
     merging in any order is bit-stable.
     """
     specs = list(specs or _MERGEABLE)
-    v = F.col(value_col)
+    v = col(value_col)
     aggs = []
     for s in specs:
         if s == "count":
@@ -153,57 +153,36 @@ def incremental_agg(
         elif s == "hll":
             aggs.append(F.hll_sketch_agg(v.cast("string")).alias("state_hll"))
         elif s == "hist":
-            if hist_lo is None or hist_hi is None or not hist_hi > hist_lo:
-                raise ValueError("hist spec needs hist_lo < hist_hi bounds")
-            width = (hist_hi - hist_lo) / hist_bins
+            if not (
+                hist_lo is not None
+                and hist_hi is not None
+                and math.isfinite(hist_lo)
+                and math.isfinite(hist_hi)
+                and hist_hi > hist_lo
+            ):
+                raise ValueError("hist spec needs finite hist_lo < hist_hi bounds")
+            lo, hi = lit(float(hist_lo)), lit(float(hist_hi))
+            width = lit((hist_hi - hist_lo) / hist_bins)
             # one parsed SQL string instead of a ~6·bins py4j Column loop
             # (r15 opt, the similarity._dot / covariance-cells mechanism;
             # guide §5 driver work): building the 50-cell when-chain
             # through the Column API measured 0.61 s / ~2.2k py4j
-            # commands PER CALL; the parsed text yields the identical
-            # expression tree in one round trip.  Column fallback kept.
-            vs = _col_sql(v)
-            if vs is not None and all(
-                math.isfinite(x) for x in (hist_lo, hist_hi, width)
-            ):
-                idx_sql = (
-                    f"LEAST(GREATEST(FLOOR((CAST(({vs}) AS DOUBLE) - "
-                    f"{float(hist_lo)!r}D) / {width!r}D), 0), {hist_bins - 1})"
+            # commands PER CALL; the parsed text (alias included — a
+            # Column .alias() is ~11 more) is one round trip.
+            idx_sql = (
+                f"LEAST(GREATEST(FLOOR((CAST({ident(value_col)} AS DOUBLE) - "
+                f"{lo}) / {width}), 0), {lit(hist_bins - 1)})"
+            )
+            cells = ", ".join(
+                f"sum(CASE WHEN {idx_sql} = {i} THEN 1 ELSE 0 END)"
+                for i in range(hist_bins)
+            )
+            aggs.append(
+                F.expr(
+                    f"struct(array({cells}) AS counts, {lo} AS lo, {hi} AS hi) "
+                    f"AS state_hist"
                 )
-                cells = ", ".join(
-                    f"sum(CASE WHEN {idx_sql} = {i} THEN 1 ELSE 0 END)"
-                    for i in range(hist_bins)
-                )
-                aggs.append(
-                    F.expr(
-                        f"struct(array({cells}) AS counts, "
-                        f"{float(hist_lo)!r}D AS lo, "
-                        f"{float(hist_hi)!r}D AS hi)"
-                    ).alias("state_hist")
-                )
-            else:
-                idx = F.least(
-                    F.greatest(
-                        F.floor(
-                            (v.cast("double") - F.lit(hist_lo)) / F.lit(width)
-                        ),
-                        F.lit(0),
-                    ),
-                    F.lit(hist_bins - 1),
-                )
-                counts = F.array(
-                    *[
-                        F.sum(F.when(idx == i, 1).otherwise(0)).alias(f"__b{i}")
-                        for i in range(hist_bins)
-                    ]
-                )
-                aggs.append(
-                    F.struct(
-                        counts.alias("counts"),
-                        F.lit(float(hist_lo)).alias("lo"),
-                        F.lit(float(hist_hi)).alias("hi"),
-                    ).alias("state_hist")
-                )
+            )
         else:
             raise ValueError(f"unsupported mergeable spec: {s}")
     return batch.groupBy(*keys).agg(*aggs)
@@ -262,66 +241,36 @@ def merge_agg_states(
 
 
 def _hist_quantile_sql(state: str, q: float) -> str:
-    """SQL text twin of :func:`_hist_quantile` over the state column
-    expression ``state`` — operator-for-operator the same tree the
-    Column/lambda construction builds (r15 opt: the two lambda folds
-    cost 0.37 s / ~1.3k py4j commands per finalize call; the parsed
-    text is one round trip)."""
-    c = f"({state}).counts"
-    lo, hi = f"({state}).lo", f"({state}).hi"
+    """Approximate quantile ``q`` from the fixed-edge histogram state
+    column named ``state``: walk the cumulative counts to the target
+    rank, linear-interpolate inside the bucket (the classic equi-width
+    quantile estimate; error ≤ one bucket width).  Pure array HOF —
+    evaluated per state row at read time.  SQL text so the two lambda
+    folds cost one round trip (r15 opt: ~1.3k py4j commands per
+    finalize call through the Column API)."""
+    st = ident(state)
+    c = f"{st}.counts"
+    lo, hi = f"{st}.lo", f"{st}.hi"
     width = f"(({hi} - {lo}) / size({c}))"
-    total = f"aggregate({c}, CAST(0 AS BIGINT), (a, x) -> a + x)"
-    target = f"({float(q)!r}D * CAST({total} AS DOUBLE))"
+    total = f"aggregate({c}, CAST(0 AS BIGINT), (__fs_a, __fs_x) -> __fs_a + __fs_x)"
+    target = f"({lit(float(q))} * CAST({total} AS DOUBLE))"
     indexed = (
         f"transform(sequence(0, size({c}) - 1), "
-        f"i -> struct(i AS i, element_at({c}, i + 1) AS c))"
+        f"__fs_i -> struct(__fs_i AS i, element_at({c}, __fs_i + 1) AS c))"
     )
     acc0 = "struct(CAST(0.0 AS DOUBLE) AS cum, CAST(NULL AS DOUBLE) AS ans)"
-    cnt = "CAST(b.c AS DOUBLE)"
+    cnt = "CAST(__fs_b.c AS DOUBLE)"
     est = (
-        f"({lo} + (CAST(b.i AS DOUBLE) + ({target} - acc.cum) / {cnt}) "
+        f"({lo} + (CAST(__fs_b.i AS DOUBLE) + ({target} - __fs_acc.cum) / {cnt}) "
         f"* {width})"
     )
     step = (
-        f"(acc, b) -> struct(acc.cum + {cnt} AS cum, "
-        f"CASE WHEN acc.ans IS NULL AND (acc.cum + {cnt}) >= {target} "
-        f"AND {cnt} > 0 THEN LEAST({est}, {hi}) ELSE acc.ans END AS ans)"
+        f"(__fs_acc, __fs_b) -> struct(__fs_acc.cum + {cnt} AS cum, "
+        f"CASE WHEN __fs_acc.ans IS NULL AND (__fs_acc.cum + {cnt}) >= {target} "
+        f"AND {cnt} > 0 THEN LEAST({est}, {hi}) ELSE __fs_acc.ans END AS ans)"
     )
     out = f"aggregate({indexed}, {acc0}, {step})"
     return f"CASE WHEN {total} > 0 THEN COALESCE(({out}).ans, {hi}) END"
-
-
-def _hist_quantile(state: F.Column, q: float) -> F.Column:
-    """Approximate quantile from a fixed-edge histogram state: walk the
-    cumulative counts to the target rank, linear-interpolate inside the
-    bucket (the classic equi-width quantile estimate; error ≤ one bucket
-    width).  Pure array HOF — evaluated per state row at read time."""
-    counts = state["counts"]
-    lo, hi = state["lo"], state["hi"]
-    bins = F.size(counts)
-    width = (hi - lo) / bins
-    total = F.aggregate(counts, F.lit(0).cast("bigint"), lambda a, x: a + x)
-    target = F.lit(q) * total.cast("double")
-    indexed = F.transform(
-        F.sequence(F.lit(0), bins - 1),
-        lambda i: F.struct(i.alias("i"), F.element_at(counts, i + 1).alias("c")),
-    )
-    acc0 = F.struct(
-        F.lit(0.0).alias("cum"), F.lit(None).cast("double").alias("ans")
-    )
-
-    def step(acc, b):
-        cnt = b["c"].cast("double")
-        new_cum = acc["cum"] + cnt
-        hit = acc["ans"].isNull() & (new_cum >= target) & (cnt > 0)
-        est = lo + (b["i"].cast("double") + (target - acc["cum"]) / cnt) * width
-        return F.struct(
-            new_cum.alias("cum"),
-            F.when(hit, F.least(est, hi)).otherwise(acc["ans"]).alias("ans"),
-        )
-
-    out = F.aggregate(indexed, acc0, step)
-    return F.when(total > 0, F.coalesce(out["ans"], hi))
 
 
 def finalize_agg_states(
@@ -347,14 +296,9 @@ def finalize_agg_states(
     if "state_hll" in have:
         cols.append(F.hll_sketch_estimate("state_hll").alias("n_distinct_est"))
     if "state_hist" in have:
-        state_sql = _col_sql(F.col("state_hist"))
         for q in quantiles:
-            name = f"p{int(round(q * 100))}"
-            if state_sql is not None and math.isfinite(float(q)):
-                qcol = F.expr(_hist_quantile_sql(state_sql, q))
-            else:
-                qcol = _hist_quantile(F.col("state_hist"), q)
-            cols.append(qcol.alias(name))
+            name = ident(f"p{int(round(q * 100))}")
+            cols.append(F.expr(f"{_hist_quantile_sql('state_hist', q)} AS {name}"))
     return states.select(*cols)
 
 

@@ -36,6 +36,7 @@ from feature_store_healthcare_spark.caching import (
     data_version,
     release_local_checkpoint,
 )
+from feature_store_healthcare_spark.sqltext import col, ident, lit
 
 #: One-entry persisted-plan caches (see caching.PlanCache): each call site
 #: that persists a corpus- or delta-sized intermediate releases its
@@ -96,24 +97,9 @@ def shingles(
     groupBy + join back (the set size is known BEFORE the explode — don't
     re-derive it after).
     """
-    from feature_store_healthcare_spark.operators.similarity import _col_sql
-
-    tokens = F.split(normalize_text(text_col), " ")
-    # one parsed SQL string instead of the lambda-transform py4j chatter
-    # (r15 opt, the similarity._dot mechanism): same tree — the token
-    # subtree is spliced twice exactly as the Column version references
-    # it twice.  Column fallback below.
-    ts = _col_sql(tokens)
-    if ts is not None:
-        ngrams = F.expr(
-            f"transform(sequence(0, greatest(size({ts}) - {int(n)}, 0)), "
-            f"i -> array_join(slice({ts}, i + 1, {int(n)}), ' '))"
-        )
-    else:
-        ngrams = F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(tokens) - n, F.lit(0))),
-            lambda i: F.array_join(F.slice(tokens, i + 1, n), " "),
-        )
+    # the tokens are projected under an internal name first, so the
+    # parsed n-gram text splices only that name (sqltext): the regex
+    # stays a Column literal and the text column's name is never parsed.
     # Docs shorter than n tokens yield a single (short) shingle — keep it.
     # NULL text yields NO row: without the filter, size(NULL)=-1 walks the
     # NULL chain to a single NULL shingle per NULL-text doc, every such
@@ -122,12 +108,19 @@ def shingles(
     # missing text → ~5e11 pairs) that cluster_survivors then collapses
     # to one survivor.  The Arrow kernel already emits nothing for NULL
     # text, so this is also what makes the documented family parity true.
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    arr = F.array_distinct(ngrams) if distinct else ngrams
+    c = col(text_col)
+    toks = df.where(c.isNotNull()).select(
+        F.col(id_col), F.split(normalize_text(c), " ").alias("__tok")
+    )
+    ngrams = (
+        f"transform(sequence(0, greatest(size(`__tok`) - {lit(n)}, 0)), "
+        f"__fs_i -> array_join(slice(`__tok`, __fs_i + 1, {lit(n)}), ' '))"
+    )
+    arr = f"array_distinct({ngrams})" if distinct else ngrams
     cols = [F.col(id_col)]
     if size_col is not None:
-        cols.append(F.size(arr).alias(size_col))
-    return df.where(c.isNotNull()).select(*cols, F.explode(arr).alias("shingle"))
+        cols.append(F.expr(f"size({arr}) AS {ident(size_col)}"))
+    return toks.select(*cols, F.expr(f"explode({arr}) AS shingle"))
 
 
 def minhash_signatures(
@@ -164,17 +157,18 @@ def minhash_signatures(
     portable builder and the explicit xxhash64-family builder.
     """
     sh = shingles(df, id_col, text_col, n=n)
-    # each min-hash aggregate as ONE parsed SQL string (r15 opt): the
-    # k-way Column loop cost ~8 py4j round trips per seed per call;
+    # each min-hash aggregate as ONE parsed SQL string, alias included
+    # (r15 opt): the k-way Column loop cost ~8 py4j round trips per seed
+    # per call, and a Column .alias() ~11 more;
     # the text parses to the identical tree (int seed literals, same
     # substring/md5/concat shapes — results bit-equal, test-pinned).
     aggs = []
     for h in range(num_hashes):
         if portable:
-            elem_sql = f"substring(md5(concat('{int(h)}:', shingle)), 1, 16)"
+            elem_sql = f"substring(md5(concat({lit(f'{h}:')}, shingle)), 1, 16)"
         else:
-            elem_sql = f"xxhash64({int(h)}, shingle)"
-        aggs.append(F.expr(f"min({elem_sql})").alias(f"mh_{h}"))
+            elem_sql = f"xxhash64({lit(h)}, shingle)"
+        aggs.append(F.expr(f"min({elem_sql}) AS mh_{h}"))
     return sh.groupBy(id_col).agg(*aggs)
 
 
@@ -1131,8 +1125,8 @@ def _banded_signatures(
             for i in range(rows_per_band)
         )
         entries.append(
-            f"struct({int(b)} AS band, "
-            f"md5(concat_ws('|', '{int(b)}', {cols_sql})) AS bkey)"
+            f"struct({lit(b)} AS band, "
+            f"md5(concat_ws('|', {lit(str(b))}, {cols_sql})) AS bkey)"
         )
     return sig.select(
         F.col(id_col), F.explode(F.expr(f"array({', '.join(entries)})")).alias("b")

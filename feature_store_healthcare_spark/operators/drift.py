@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from feature_store_healthcare_spark.caching import PlanCache, data_version
+from feature_store_healthcare_spark.sqltext import col, ident, lit
 
 #: One-entry persisted-plan caches for the tiny per-key statistic frames
 #: that are referenced TWICE inside one returned plan (psi/ks: the
@@ -334,18 +335,17 @@ def robust_outliers(
     NULL when MAD = 0 (degenerate distribution; nothing flags).
     """
     keys = list(keys)
-    v = F.col(value_col).cast("double")
+    x = ident(value_col)
+    v = col(value_col).cast("double")
     med = _MAD_MEDIAN_CACHE.get_or_persist(
         df.groupBy(*keys).agg(
-            F.expr(f"cast(percentile({value_col}, 0.5) as double)").alias("__med")
+            F.expr(f"cast(percentile({x}, 0.5) as double) AS __med")
         ),
         version=data_version(df),
     )
     with_med = df.join(F.broadcast(med), keys)
     mad = with_med.groupBy(*keys).agg(
-        F.expr(f"cast(percentile(abs({value_col} - __med), 0.5) as double)").alias(
-            "__mad"
-        )
+        F.expr(f"cast(percentile(abs({x} - __med), 0.5) as double) AS __mad")
     )
     # ANSI mode: guard the division itself (a `when` around a consuming
     # aggregate does not stop the divide-by-zero from evaluating)
@@ -390,13 +390,14 @@ def equidepth_bins(
     per-bin min/max rounded to 6.
     """
     keys = list(keys)
-    fracs = ", ".join(str(i / nbins) for i in range(1, nbins))
+    fracs = ", ".join(lit(i / nbins) for i in range(1, nbins))
     edges = df.groupBy(*keys).agg(
         F.expr(
-            f"transform(percentile({value_col}, array({fracs})), x -> cast(x as double))"
-        ).alias("__edges")
+            f"transform(percentile({ident(value_col)}, array({fracs})), "
+            f"__fs_x -> cast(__fs_x as double)) AS __edges"
+        )
     )
-    v = F.col(value_col).cast("double")
+    v = col(value_col).cast("double")
     binned = df.join(F.broadcast(edges), keys).withColumn(
         "bin", F.size(F.filter(F.col("__edges"), lambda e: e <= v))
     )
@@ -548,15 +549,12 @@ def winsorize(
     projection."""
     keys = list(keys)
     out_col = out_col or f"{value_col}_wins"
+    x = ident(value_col)
     fences = df.groupBy(*keys).agg(
-        F.expr(
-            f"cast(percentile({value_col}, {p_lo}) as double)"
-        ).alias("__f_lo"),
-        F.expr(
-            f"cast(percentile({value_col}, {p_hi}) as double)"
-        ).alias("__f_hi"),
+        F.expr(f"cast(percentile({x}, {lit(float(p_lo))}) as double) AS __f_lo"),
+        F.expr(f"cast(percentile({x}, {lit(float(p_hi))}) as double) AS __f_hi"),
     )
-    v = F.col(value_col).cast("double")
+    v = col(value_col).cast("double")
     clipped = F.when(v < F.col("__f_lo"), F.lit(-1)).when(
         v > F.col("__f_hi"), F.lit(1)
     ).otherwise(F.lit(0))

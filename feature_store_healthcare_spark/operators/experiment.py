@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from feature_store_healthcare_spark.sqltext import ident, lit
+
 #: md5-prefix width for arm assignment (same convention as operators.sampling)
 _PREFIX = 8
 
@@ -153,7 +155,6 @@ def logistic_regression_fit(
         *[F.col(c).cast("double").alias(f"__x{j + 1}") for j, c in enumerate(feature_cols)],
         F.col(label_col).cast("double").alias("__y"),
     ).localCheckpoint(eager=False)
-    dec = lambda c: F.sum(c.cast("decimal(30,10)")).cast("double")  # noqa: E731
     if n_iters < 1 and state.count() == 0:  # no step-1 aggregate to ride
         raise ValueError("logistic_regression_fit: empty feature table")
 
@@ -165,7 +166,7 @@ def logistic_regression_fit(
     # too, not just the success path
     try:
         for step in range(1, n_iters + 1):
-            aggs = _logreg_step_aggs(w, d, dec, with_count=n is None)
+            aggs = _logreg_step_aggs(w, d, with_count=n is None)
             g = state.agg(*aggs).collect()[0]
             if n is None:
                 n = g["__n"]
@@ -189,60 +190,38 @@ def logistic_regression_fit(
     return spark.createDataFrame(rows, schema)
 
 
-def _logreg_step_aggs(w: list[float], d: int, dec, with_count: bool) -> list[Column]:
+def _logreg_step_aggs(
+    w: list[float], d: int, _dec=None, *, with_count: bool
+) -> list[Column]:
     """One GD step's aggregate list — gradient per weight, loss, and
     (step 1 only) the row count.
 
     Built as ONE parsed SQL string per aggregate (round-15; the
     similarity._dot mechanism from r14): the Column-API construction
     cost ~(d+2)·40 py4j round trips PER STEP, pure driver chatter.  The
-    text yields the identical expression tree — double literals carry
-    the ``D`` suffix and ``repr``'s shortest round-trip digits, the z
+    text yields the identical expression tree — weights are
+    :func:`~feature_store_healthcare_spark.sqltext.lit` double literals
+    (``repr`` digits with the ``D`` suffix; NaN/±inf as casts), the z
     chain keeps the same left-associated operand order — so plans and
     results are bit-identical (plan-equality pinned in
-    tests/test_experiment.py).  Falls back to the Column loop when a
-    weight is non-finite (no SQL literal form)."""
-    import math
+    tests/test_drift_encode.py).  ``_dec`` is ignored: the decimal-sum
+    wrapper is part of the text."""
+    z = lit(w[0]) + "".join(f" + ({lit(w[j + 1])} * __x{j + 1})" for j in range(d))
+    p = f"round(1.0D / (1.0D + exp(- ({z}))), 6)"
+    pc = f"least(greatest({p}, {lit(1e-6)}), {lit(1.0 - 1e-6)})"
+    resid = f"({p} - __y)"
 
-    y = F.col("__y")
-    if all(math.isfinite(x) for x in w):
-        lit = lambda v: repr(float(v)) + "D"  # noqa: E731
-        z = lit(w[0]) + "".join(
-            f" + ({lit(w[j + 1])} * __x{j + 1})" for j in range(d)
+    def dec_sum(expr_sql: str, alias: str) -> Column:
+        return F.expr(
+            f"cast(sum(cast({expr_sql} as decimal(30,10))) as double) "
+            f"AS {ident(alias)}"
         )
-        p = f"round(1.0D / (1.0D + exp(- ({z}))), 6)"
-        pc = f"least(greatest({p}, {lit(1e-6)}), {lit(1.0 - 1e-6)})"
-        resid = f"({p} - __y)"
-        dec_sql = (
-            lambda c, alias: F.expr(  # noqa: E731
-                f"cast(sum(cast({c} as decimal(30,10))) as double)"
-            ).alias(alias)
-        )
-        aggs = [dec_sql(resid, "g0")]
-        aggs += [
-            dec_sql(f"({resid} * __x{j + 1})", f"g{j + 1}") for j in range(d)
-        ]
-        aggs.append(
-            dec_sql(
-                f"- ((__y * ln({pc})) + ((1.0D - __y) * ln(1.0D - {pc})))", "__l"
-            )
-        )
-    else:
-        z = F.lit(w[0])
-        for j in range(d):
-            z = z + F.lit(w[j + 1]) * F.col(f"__x{j + 1}")
-        p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-        pc = F.least(F.greatest(p, F.lit(1e-6)), F.lit(1.0 - 1e-6))
-        resid = p - y
-        aggs = [dec(resid).alias("g0")]
-        aggs += [
-            dec(resid * F.col(f"__x{j + 1}")).alias(f"g{j + 1}") for j in range(d)
-        ]
-        aggs.append(
-            dec(-(y * F.log(pc) + (F.lit(1.0) - y) * F.log(F.lit(1.0) - pc))).alias(
-                "__l"
-            )
-        )
+
+    aggs = [dec_sum(resid, "g0")]
+    aggs += [dec_sum(f"({resid} * __x{j + 1})", f"g{j + 1}") for j in range(d)]
+    aggs.append(
+        dec_sum(f"- ((__y * ln({pc})) + ((1.0D - __y) * ln(1.0D - {pc})))", "__l")
+    )
     if with_count:
         aggs.append(F.count(F.lit(1)).alias("__n"))
     return aggs

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from feature_store_healthcare_spark.caching import release_local_checkpoint
 from feature_store_healthcare_spark.operators.dedup import normalize_text
+from feature_store_healthcare_spark.sqltext import ident, lit
 
 # Tiny per-language stopword lists for the n-gram/stopword-hit heuristic.
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -253,7 +254,10 @@ def bpe_merge_candidates(
     ).where(F.length("w") >= 2)
     pairs = words.select(
         F.explode(
-            F.expr("transform(sequence(1, length(w) - 1), i -> substr(w, i, 2))")
+            F.expr(
+                "transform(sequence(1, length(w) - 1), "
+                "__fs_i -> substr(w, __fs_i, 2))"
+            )
         ).alias("pair")
     )
     counts = pairs.groupBy("pair").agg(F.count(F.lit(1)).alias("cnt"))
@@ -270,80 +274,38 @@ def bpe_merge_candidates(
     return head.withColumn("rank", F.row_number().over(w))
 
 
-def _sql_str(s: str) -> str:
-    """A Spark SQL string literal for ``s``, valid in BOTH parser modes
-    (r14 ADVICE #5): quotes escape by doubling (``''`` — accepted by the
-    lexer whether or not ``spark.sql.parser.escapedStringLiterals`` is
-    set), and backslashes double only in the default mode where ``\\``
-    is an escape character (with escapedStringLiterals=true a backslash
-    is literal and doubling it would corrupt the symbol)."""
-    from pyspark.sql import SparkSession
-
-    escaped_literals = False
-    sess = SparkSession.getActiveSession()
-    if sess is not None:
-        escaped_literals = (
-            sess.conf.get(
-                "spark.sql.parser.escapedStringLiterals", "false"
-            ).lower()
-            == "true"
+def _merge_folds(syms: str, rules) -> Column:
+    """Apply each merge rule ``(a, b) -> a+b`` of ``rules`` in order to
+    the symbol-array column named ``syms``, greedy left-to-right and
+    non-overlapping (``("a","a")`` on ``aaa`` yields ``[aa, a]``) — the
+    ONE JVM-side ``aggregate`` fold shared by :func:`bpe_train` (one rule
+    per training round) and :func:`bpe_encode` (a pass of rules), so the
+    encoder reproduces the trainer's segmentation by construction.  No
+    Python UDF: the fold is a codegen'd higher-order function over the
+    symbol array.  The chain is one parsed SQL string (linear text
+    growth, one py4j call instead of dozens per rule — the similarity
+    ._dot finding, r14 opt), with the rule symbols as
+    :func:`~feature_store_healthcare_spark.sqltext.lit` literals."""
+    out = ident(syms)
+    for a, b in rules:
+        out = (
+            f"aggregate({out}, cast(array() as array<string>), "
+            f"(__fs_acc, __fs_x) -> "
+            f"CASE WHEN size(__fs_acc) > 0 "
+            f"AND element_at(__fs_acc, -1) = {lit(a)} AND __fs_x = {lit(b)} "
+            f"THEN concat(slice(__fs_acc, 1, size(__fs_acc) - 1), "
+            f"array(concat(element_at(__fs_acc, -1), __fs_x))) "
+            f"ELSE concat(__fs_acc, array(__fs_x)) END)"
         )
-    if not escaped_literals:
-        s = s.replace("\\", "\\\\")
-    return "'" + s.replace("'", "''") + "'"
+    return F.expr(out)
 
 
-def _merge_pair_fold_sql(syms_sql: str, a: str, b: str) -> str:
-    """SQL text of one merge-rule fold over the symbol-array expression
-    ``syms_sql`` — see :func:`_merge_pair_fold`.  Built as text so a
-    chain of rules (``bpe_encode``'s per-pass loop, the trainer's
-    per-round merge) costs one parse instead of dozens of py4j round
-    trips per rule (the similarity._dot finding, r14 opt)."""
-    la, lb = _sql_str(a), _sql_str(b)
-    return (
-        f"aggregate({syms_sql}, cast(array() as array<string>), (acc, x) -> "
-        f"CASE WHEN size(acc) > 0 AND element_at(acc, -1) = {la} "
-        f"AND x = {lb} "
-        f"THEN concat(slice(acc, 1, size(acc) - 1), "
-        f"array(concat(element_at(acc, -1), x))) "
-        f"ELSE concat(acc, array(x)) END)"
-    )
-
-
-def _merge_pair_fold(syms, a: str, b: str):
-    """Apply merge rule ``(a, b) -> a+b`` to a symbol array, greedy
-    left-to-right and non-overlapping (``("a","a")`` on ``aaa`` yields
-    ``[aa, a]``) — the ONE JVM-side ``aggregate`` fold shared by
-    :func:`bpe_train` (per training round) and :func:`bpe_encode` (per
-    rule pass), so the encoder reproduces the trainer's segmentation by
-    construction.  No Python UDF: the fold is a codegen'd higher-order
-    function over the symbol array.  ``syms`` may be a Column (its SQL
-    text is recovered) or a SQL string."""
-    if isinstance(syms, str):
-        return F.expr(_merge_pair_fold_sql(syms, a, b))
-    try:
-        syms_sql = syms._jc.node().sql()
-    except Exception:
-        # Column-API fallback (internal ColumnNode surface unavailable)
-        return F.aggregate(
-            syms,
-            F.expr("cast(array() as array<string>)"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(a))
-                & (x == F.lit(b)),
-                F.concat(
-                    F.slice(acc, F.lit(1), F.size(acc) - 1),
-                    F.array(F.concat(F.element_at(acc, -1), x)),
-                ),
-            ).otherwise(F.concat(acc, F.array(x))),
-        )
-    return F.expr(_merge_pair_fold_sql(syms_sql, a, b))
-
-
-def _char_syms(col) -> "F.Column":
+def _char_syms(word: str) -> Column:
     """A word as its character-symbol array — round 0 of any BPE state."""
-    return F.expr(f"transform(sequence(1, length({col})), i -> substr({col}, i, 1))")
+    w = ident(word)
+    return F.expr(
+        f"transform(sequence(1, length({w})), __fs_i -> substr({w}, __fs_i, 1))"
+    )
 
 
 def bpe_train(df: DataFrame, text_col: str, n_merges: int = 8) -> DataFrame:
@@ -406,9 +368,9 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 8) -> DataFrame:
                 "cnt",
                 F.explode(
                     F.expr(
-                        "transform(sequence(1, size(syms) - 1), i -> "
-                        "struct(element_at(syms, i) AS lhs, "
-                        "element_at(syms, i + 1) AS rhs))"
+                        "transform(sequence(1, size(syms) - 1), __fs_i -> "
+                        "struct(element_at(syms, __fs_i) AS lhs, "
+                        "element_at(syms, __fs_i + 1) AS rhs))"
                     )
                 ).alias("p"),
             )
@@ -431,7 +393,7 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 8) -> DataFrame:
         rules.append((step, a, b, a + b, c))
         if step == n_merges:
             break  # the last rule needs no re-segmentation pass
-        merged = _merge_pair_fold(F.col("syms"), a, b)
+        merged = _merge_folds("syms", [(a, b)])
         prev = state
         state = state.select("cnt", merged.alias("syms")).localCheckpoint(
             eager=False
@@ -467,7 +429,7 @@ def bpe_encode(
     ``(id_col, tokens array<string>, n_words, n_tokens)``.
 
     Semantics: rules are applied as SEQUENTIAL greedy left-to-right
-    passes in step order — the same :func:`_merge_pair_fold` the trainer
+    passes in step order — the same :func:`_merge_folds` the trainer
     runs per round, so encoding the training corpus reproduces the
     trainer's final segmentation bit-for-bit (test-pinned).  (Canonical
     BPE encoders apply the lowest-rank pair present in each word
@@ -525,12 +487,8 @@ def bpe_encode(
     seg = doc_words.select("w").distinct().select("w", _char_syms("w").alias("syms"))
     last_ck = None  # superseded pass checkpoints released eagerly
     for start in range(0, len(rules), rules_per_pass):
-        # chain the pass's folds as ONE parsed SQL string (linear text
-        # growth, one py4j call per pass instead of dozens per rule)
-        col_sql = "syms"
-        for a, b in rules[start : start + rules_per_pass]:
-            col_sql = _merge_pair_fold_sql(col_sql, a, b)
-        seg = seg.select("w", F.expr(col_sql).alias("syms"))
+        pass_rules = rules[start : start + rules_per_pass]
+        seg = seg.select("w", _merge_folds("syms", pass_rules).alias("syms"))
         if start + rules_per_pass < len(rules):
             seg = seg.localCheckpoint(eager=True)
             if last_ck is not None:
@@ -539,7 +497,10 @@ def bpe_encode(
 
     vocab = F.broadcast(seg) if broadcast_vocab else seg
     ordered = F.flatten(
-        F.expr("transform(array_sort(collect_list(struct(pos, syms))), s -> s.syms)")
+        F.expr(
+            "transform(array_sort(collect_list(struct(pos, syms))), "
+            "__fs_s -> __fs_s.syms)"
+        )
     )
     return (
         doc_words.join(vocab, "w")

@@ -1415,7 +1415,7 @@ def embedding_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = pairs.withColumn(
         "cosine",
         F.round(
-            similarity.cosine_similarity(F.col("__qv"), F.col("__cv"), dim=64), 4
+            similarity.cosine_similarity("__qv", "__cv", dim=64), 4
         ),
     )
     w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid"))
@@ -4444,7 +4444,7 @@ def _cosine_rank20(emb: DataFrame) -> DataFrame:
     cos_scored = pairs.withColumn(
         "cosine",
         F.round(
-            similarity.cosine_similarity(F.col("__qv"), F.col("__cv"), dim=64), 4
+            similarity.cosine_similarity("__qv", "__cv", dim=64), 4
         ),
     )
     w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid"))

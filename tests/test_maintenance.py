@@ -5,6 +5,7 @@ compaction of the append-only store.
 
 from __future__ import annotations
 
+import math
 from datetime import datetime
 
 import pytest
@@ -208,27 +209,51 @@ class TestHistQuantileState:
             assert abs(out[g]["p50"] - exact_p50) <= 2.0
             assert abs(out[g]["p95"] - exact_p95) <= 2.0
 
-    def test_parsed_sql_paths_match_column_fallback(self, spark, monkeypatch):
-        """r15 opt: the hist state cells and the quantile folds are built
-        as ONE parsed SQL string (driver-chatter removal); this pins the
-        fast path bit-identical to the Column/lambda construction AND
-        (canary) that the fast path actually activates on this Spark."""
+    def test_parsed_sql_paths_match_column_fallback(self, spark):
+        """The hist state cells and the quantile fold are parsed SQL
+        text (sqltext); this pins both bit-identical to a plain-Python
+        recomputation of the bucket counts and the cumulative walk (the
+        same double arithmetic in the same order)."""
         batches, _ = self._batches(spark, nb=1, n=200)
         df = batches[0]
-        kw = dict(specs=["count", "hist"], hist_lo=0.0, hist_hi=100.0, hist_bins=17)
+        lo, hi, bins, qs = 0.0, 100.0, 17, (0.5, 0.9)
+        st = maintenance.incremental_agg(
+            df, ["grp"], "v", specs=["count", "hist"], hist_lo=lo, hist_hi=hi,
+            hist_bins=bins,
+        )
+        fin = maintenance.finalize_agg_states(st, ["grp"], quantiles=qs)
+        got = sorted(tuple(r) for r in fin.collect())
 
-        def run():
-            st = maintenance.incremental_agg(df, ["grp"], "v", **kw)
-            fin = maintenance.finalize_agg_states(st, ["grp"], quantiles=(0.5, 0.9))
-            return sorted(tuple(r) for r in fin.collect())
+        width = (hi - lo) / bins
+        counts = {}
+        for r in df.collect():
+            idx = min(max(math.floor((r.v - lo) / width), 0), bins - 1)
+            counts.setdefault(r.grp, [0] * bins)[idx] += 1
 
-        # canary: the internal ColumnNode.sql surface must be live (a
-        # silent fallback would re-inflate construction with no failure)
-        assert maintenance._col_sql(F.col("state_hist")) is not None
-        fast = run()
-        monkeypatch.setattr(maintenance, "_col_sql", lambda c: None)
-        slow = run()
-        assert fast == slow  # bit-identical, not approximately
+        def quantile(cs, q):
+            total = sum(cs)
+            target = q * float(total)
+            w = (hi - lo) / len(cs)
+            cum, ans = 0.0, None
+            for i, c in enumerate(cs):
+                c = float(c)
+                if ans is None and cum + c >= target and c > 0:
+                    ans = min(lo + (float(i) + (target - cum) / c) * w, hi)
+                cum += c
+            return (hi if ans is None else ans) if total > 0 else None
+
+        want = sorted(
+            (g, sum(cs), *(quantile(cs, q) for q in qs)) for g, cs in counts.items()
+        )
+        assert got == want  # bit-identical, not approximately
+
+    def test_hist_rejects_non_finite_bounds(self, spark):
+        df = spark.createDataFrame([Row(grp="a", v=1.0)])
+        for lo, hi in [(math.nan, 1.0), (0.0, math.inf), (-math.inf, 0.0)]:
+            with pytest.raises(ValueError, match="finite"):
+                maintenance.incremental_agg(
+                    df, ["grp"], "v", specs=["hist"], hist_lo=lo, hist_hi=hi
+                )
 
     def test_hist_edges(self, spark):
         # all mass in one value: every quantile collapses to that bucket

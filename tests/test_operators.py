@@ -645,8 +645,8 @@ def test_dot_unrolled_matches_fold(spark):
     b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
     pairs = a.join(b, on=F.col("ia") < F.col("ib"))
     both = pairs.select(
-        similarity.cosine_similarity(F.col("va"), F.col("vb")).alias("fold"),
-        similarity.cosine_similarity(F.col("va"), F.col("vb"), dim=64).alias("unrolled"),
+        similarity.cosine_similarity("va", "vb").alias("fold"),
+        similarity.cosine_similarity("va", "vb", dim=64).alias("unrolled"),
     )
     # bit-identical: same multiplications, same left-to-right accumulation
     assert both.where(F.col("fold") != F.col("unrolled")).count() == 0
@@ -1840,28 +1840,10 @@ def test_cosine_topk_blas_preserves_string_ids(spark):
 
 
 def test_parsed_sql_fast_paths_active_on_this_spark(spark):
-    """Canary (round-15 VERDICT #7): the parsed-SQL construction fast
-    paths ride an internal Spark surface (Column._jc.node().sql()).  If
-    a Spark upgrade removes it, the engine silently falls back to the
-    ~1.5 s/expression Column-loop construction and every embedding/BPE
-    floor regresses with no test failing — this test is the tripwire."""
-    from pyspark.sql import functions as F
-
-    from feature_store_healthcare_spark.operators import similarity, text
-
-    col_sql = similarity._col_sql(F.col("embedding"))
-    assert col_sql is not None and "embedding" in col_sql
-    # and the BPE fold path recovers SQL text from a Column the same way
-    merged = text._merge_pair_fold(F.col("syms"), "a", "b")
-    # the fast path yields an unresolved expression built from ONE parsed
-    # string; the fallback builds a lambda-function tree via the Column
-    # API.  Both are Columns — distinguish by the internal node type the
-    # fast path produces (SQL text parse -> expression string node).
-    import re
-
-    s = text._merge_pair_fold_sql("syms", "a", "b")
-    assert re.search(r"aggregate\(syms", s)
-    # equality of the two constructions (fast vs fallback) on real data
+    """Canary (round-15 VERDICT #7): the BPE merge fold is one parsed SQL
+    string over the quoted symbol column (sqltext); it must still parse
+    and fold greedily left-to-right on this Spark."""
+    merged = text._merge_folds("syms", [("a", "b")])
     df = spark.createDataFrame([(["a", "b", "c", "a", "b"],)], "syms array<string>")
     fast = df.select(merged.alias("out")).collect()[0]["out"]
     assert fast == ["ab", "c", "ab"]

@@ -7,7 +7,7 @@ Phases timed separately (min-of-N after a warm-up):
   rules_s      — merges.orderBy(step).collect() on the trainer's output
   seg_build_s  — the fold-chain select over the distinct-word table
                  (parse + analysis of the nested aggregate SQL)
-  parse_s      — spark parse ONLY of the 6-rule nested fold expression
+  parse_s      — text build + parse ONLY of the 6-rule nested fold column
   enc_build_s  — remaining encode construction (join + groupBy + select)
   exec_s       — noop run of the final frame
 """
@@ -53,11 +53,7 @@ def main() -> None:
     rules_s = best(lambda: merges.orderBy("step").collect(), n)
     rules = [(r.lhs, r.rhs) for r in merges.orderBy("step").collect()]
 
-    col_sql = "syms"
-    for a, b in rules:
-        col_sql = text._merge_pair_fold_sql(col_sql, a, b)
-    print(f"fold-chain SQL text: {len(col_sql)} chars")
-    parse_s = best(lambda: F.expr(col_sql), n)
+    parse_s = best(lambda: text._merge_folds("syms", rules), n)
 
     doc_words = docs.select(
         F.col("doc_id"),
@@ -69,7 +65,7 @@ def main() -> None:
         "w", text._char_syms("w").alias("syms")
     )
     seg_build_s = best(
-        lambda: seg0.select("w", F.expr(col_sql).alias("syms")), n
+        lambda: seg0.select("w", text._merge_folds("syms", rules).alias("syms")), n
     )
     enc_build_s = best(
         lambda: text.bpe_encode(docs, "doc_id", "text", rules), n
