@@ -329,6 +329,11 @@ class FeatureRegistry:
         self._access_log: list[dict[str, Any]] = []
         self._seq = 0
         self._lock = threading.Lock()
+        #: bumped once per change to the value store (each
+        #: ingest_feature_value, each ingest_values_df; not flush, which
+        #: only moves rows), so a reader holding a derived copy can tell
+        #: whether the store moved since it was built
+        self.version = 0
 
     # -- registration (ref :253-330) ------------------------------------
 
@@ -574,9 +579,10 @@ class FeatureRegistry:
         entity_id: str,
         value: Any,
         event_timestamp: datetime | str | None = None,
-    ) -> None:
+    ) -> dict[str, Any]:
         """Validated append (ref :400-441): only ACTIVE features accept
-        values (ref :423-424); created_timestamp is ingest time."""
+        values (ref :423-424); created_timestamp is ingest time.  Returns
+        the appended row, a VALUES_SCHEMA name → value dict."""
         feature = self.get_feature(feature_id)
         if feature.status is not FeatureStatus.ACTIVE:
             raise ValueError(
@@ -609,7 +615,9 @@ class FeatureRegistry:
         with self._lock:
             row["seq"] = self._seq
             self._seq += 1
+            self.version += 1
             self._buffer.append(tuple(row[n] for n in VALUES_SCHEMA.fieldNames()))
+        return row
 
     def materialize_derived_feature(
         self,
@@ -670,7 +678,9 @@ class FeatureRegistry:
             .partitionBy("event_date")
             .parquet(f"{self.storage_dir}/feature_values")
         )
-        self._persisted = True
+        with self._lock:
+            self._persisted = True
+            self.version += 1
 
     def flush(self) -> None:
         """Persist buffered driver-side rows (append-only blind write)."""

@@ -3,13 +3,16 @@ freshness, metrics.
 
 Re-expresses /root/reference/src/serving/feature_server.py as Spark plans:
 
-- Online store (ref :203 ``dict[store_key → {...}]``) → a *latest-value*
-  wide table maintained by merge-upsert (stores.LatestStore), persisted +
-  cached; point-gets are filters on the cached table (OP-3).  The
-  reference's 100 ms online SLA (ref :105) is out of reach for a Spark job
-  per request — the cached-table read is the documented mitigation
-  (SURVEY.md §4.2); a production deployment exports this table to a KV
-  store.
+- Online store (ref :203 ``dict[store_key → {...}]``) → an in-process
+  point index of the latest-value table (OP-3): one ``toArrow()`` of the
+  ``latest_per_key`` plan, sorted by entity, with each entity's row range
+  in a dict, plus an overlay of rows patched in by :meth:`write_features`.
+  A read turns only its own entity's rows into Python values and runs no
+  Spark job.  A change to the store not made through this server (seen by
+  ``FeatureRegistry.version``) drops the index; the next read rebuilds it.
+  The latest table must fit in driver memory (``toArrow`` is bounded by
+  ``spark.driver.maxResultSize``); past that, the online path is
+  :func:`stores.export_online_kv` + :func:`stores.kv_point_get`.
 - Offline store (ref :204 append-only list) → append-only long table
   shared with the registry (system of record, bitemporal).
 - get_point_in_time_features (ref :355-408, O(spine×values×features)
@@ -17,15 +20,20 @@ Re-expresses /root/reference/src/serving/feature_server.py as Spark plans:
   operators.pit.point_in_time_pivot (join + multi-feature conditional
   max_by — 2 shuffles total, independent of feature count), wide output
   with {name}__timestamp companions (OP-16 + OP-12 fused).
-- LRU cache + TTL (ref :136-176) → driver-side LRU over collected vectors
-  (request-level concern, not a data-plane operator), plus Spark-side
-  ``.cache()`` of the online table.
+- LRU cache + TTL (ref :136-176) → driver-side LRU over served vectors
+  (request-level concern, not a data-plane operator).  A write drops its
+  entity's entries; an outside change to the store drops them all.  PHI
+  access is checked on every read, after the LRU, so a vector cached for
+  an authorised caller is never served unmasked to another.
 - Metrics (ref :111-133, :481-493) → counters + a request-latency log
   aggregated with avg/percentile_approx (OP-22/23/25).
 """
 
 from __future__ import annotations
 
+import hashlib
+import logging
+import threading
 import time
 from collections import OrderedDict
 from dataclasses import dataclass, field
@@ -33,6 +41,8 @@ from datetime import datetime, timezone
 from enum import Enum
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -48,6 +58,8 @@ from feature_store_healthcare_spark.registry import (
     FeatureRegistry,
 )
 
+_log = logging.getLogger(__name__)
+
 
 def _utcnow() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
@@ -58,16 +70,18 @@ class ServingMode(str, Enum):
     naming the engine path each mode maps to:
 
     - ``ONLINE``: low-latency single-entity reads —
-      :meth:`FeatureServer.get_online_features` over the cached
-      latest-value table, or :func:`stores.kv_point_get` against the
-      exported KV table (OP-3).
+      :meth:`FeatureServer.get_online_features` over the in-process point
+      index of the latest-value table (no Spark job per read), or
+      :func:`stores.kv_point_get` against the exported KV table when the
+      latest table outgrows driver memory (OP-3).
     - ``OFFLINE``: batch/historical —
       :meth:`FeatureServer.get_offline_features` and the point-in-time
       training joins (:meth:`FeatureServer.get_point_in_time_features`,
       operators.pit).
     - ``STREAMING``: real-time updates — the Structured Streaming
       maintainers in ``streaming.pipeline`` (streaming_online_upsert et
-      al.) feeding the same online table the ONLINE path reads.
+      al.) merging into a latest-value table (``stores.LatestStore``)
+      with the same event-time-guarded latest semantics.
     """
 
     ONLINE = "online"
@@ -156,6 +170,49 @@ class _LRUCache:
         for k in stale:
             del self._data[k]
 
+    def clear(self) -> None:
+        self._data.clear()
+
+
+def _order(row: dict[str, Any]) -> tuple:
+    """The (event, created, seq) order latest_per_key picks the newest by."""
+    return row["event_timestamp"], row["created_timestamp"], row["seq"]
+
+
+class _OnlineIndex:
+    """The latest row per (feature_id, entity_id), held in process: the
+    Arrow table sorted by entity, each entity's row range, and an overlay
+    of rows patched in since the build (entity → feature_id → row)."""
+
+    def __init__(self, table: pa.Table) -> None:
+        self.table = table.sort_by("entity_id")
+        runs = pc.run_end_encode(self.table.column("entity_id").combine_chunks())
+        ends = runs.run_ends.to_pylist()
+        self.ranges = dict(zip(runs.values.to_pylist(), zip([0, *ends[:-1]], ends)))
+        self.overlay: dict[str, dict[str, dict[str, Any]]] = {}
+
+    def rows_for(self, entity_id: str) -> dict[str, dict[str, Any]]:
+        """feature_id → latest row of one entity; only its slice becomes
+        Python values."""
+        start, stop = self.ranges.get(entity_id, (0, 0))
+        rows = {r["feature_id"]: r for r in self.table.slice(start, stop - start).to_pylist()}
+        rows.update(self.overlay.get(entity_id, {}))
+        return rows
+
+    def patch(self, row: dict[str, Any]) -> bool:
+        """Take in one newly ingested row: it replaces the incumbent only if
+        its (event, created, seq) is strictly greater.  Returns False on an
+        exact tie, which latest_per_key breaks on the payload; the caller
+        then drops the index so the next read rebuilds through Spark."""
+        incumbent = self.rows_for(row["entity_id"]).get(row["feature_id"])
+        if incumbent is not None:
+            if _order(row) == _order(incumbent):
+                return False
+            if _order(row) < _order(incumbent):
+                return True
+        self.overlay.setdefault(row["entity_id"], {})[row["feature_id"]] = row
+        return True
+
 
 class FeatureServer:
     """Online/offline serving over a FeatureRegistry's value store."""
@@ -165,38 +222,65 @@ class FeatureServer:
         self.spark = registry.spark
         self.config = config or ServingConfig()
         self._cache = _LRUCache(self.config.cache_max_size, self.config.cache_ttl_seconds)
-        self._online_cache: DataFrame | None = None
+        self._index: _OnlineIndex | None = None
+        self._build_reason = "first read"  # why the next index build happens
+        self._version = registry.version  # store version the server has seen
+        # one reader or writer at a time: a write's ingest + patch must not
+        # interleave with an index build, or the build can miss the row
+        self._lock = threading.Lock()
         self._latencies: list[float] = []
         self._requests = 0
         self._stale_served = 0
+        self._index_builds = 0
+        self._index_patches = 0
+        self._index_rows = 0
 
     # -- online path (ref :206-288, OP-3) --------------------------------
 
-    def _online_latest(self) -> DataFrame:
-        """Latest-value table per (feature, entity) — the online store.
-        Cached (ref's LRU analog at the table level); invalidated on write."""
-        if self._online_cache is None:
-            values = self.registry.values_df()
-            latest = latest_per_key(
-                values,
-                ["feature_id", "entity_id"],
-                "event_timestamp",
-                tiebreak=["created_timestamp", "seq"],
+    def _latest(self) -> DataFrame:
+        """Latest-value table per (feature, entity): the online store's plan."""
+        return latest_per_key(
+            self.registry.values_df(),
+            ["feature_id", "entity_id"],
+            "event_timestamp",
+            tiebreak=["created_timestamp", "seq"],
+        )
+
+    def _online_index(self) -> _OnlineIndex:
+        if self._index is None:
+            t0 = time.perf_counter()
+            self._index = _OnlineIndex(self._latest().toArrow())
+            rows = self._index.table.num_rows
+            self._index_builds += 1
+            self._index_rows += rows
+            _log.debug(
+                "online index build: %d rows in %.1f ms (%s)",
+                rows, (time.perf_counter() - t0) * 1000, self._build_reason,
             )
-            self._online_cache = latest.cache()
-        return self._online_cache
+        return self._index
+
+    def _drop_index(self, reason: str) -> None:
+        if self._index is not None:
+            self._index = None
+            self._build_reason = reason
+
+    def _sync(self) -> None:
+        """Drop the index and the request LRU if the store changed other
+        than through this server's writes."""
+        if self.registry.version != self._version:
+            self._version = self.registry.version
+            self._cache.clear()
+            self._drop_index("external change")
 
     def invalidate_online_cache(self) -> None:
-        if self._online_cache is not None:
-            self._online_cache.unpersist()
-            self._online_cache = None
+        """Drop the online index; the next read rebuilds it."""
+        with self._lock:
+            self._drop_index("explicit invalidate")
 
     def _cache_key(self, entity_type: str, entity_id: str, names: list[str]) -> str:
         # Entity prefix stays plain so invalidate_entity can prefix-match
         # (ref :449); only the canonical sorted name list is hashed
         # (ref :470-479).
-        import hashlib
-
         digest = hashlib.sha256(",".join(sorted(names)).encode()).hexdigest()
         return f"{entity_type}:{entity_id}:{digest}"
 
@@ -208,48 +292,55 @@ class FeatureServer:
         user_id: str | None = None,
         user_roles: list[str] | None = None,
     ) -> FeatureVector:
-        """Ref :206-288: LRU probe → point-get on the latest table →
-        freshness classification → null-fill for missing names."""
+        """Ref :206-288: LRU probe → point-get on the online index →
+        freshness classification → null-fill for missing names → PHI mask
+        (a feature the caller's roles do not cover reads as missing and is
+        audited as ``access_denied``, as in
+        :meth:`FeatureRegistry.get_feature_vector`)."""
         t0 = time.monotonic()
-        self._requests += 1
-        key = self._cache_key(entity_type, entity_id, feature_names)
-        cached = self._cache.get(key)
-        if cached is not None:
-            vec = FeatureVector(**cached)
-            vec.cache_hit = True
-            vec.latency_ms = (time.monotonic() - t0) * 1000
-            vec.retrieved_at = _utcnow()
-            self._record_latency(vec.latency_ms)
-            return vec
-
-        by_name = {
-            f.name: f
-            for f in self.registry.list_features(entity_type=entity_type)
-            if f.name in feature_names
-        }
-        wanted_ids = {f.feature_id: f for f in by_name.values()}
-        rows = []
-        if wanted_ids:
-            rows = (
-                self._online_latest()
-                .where(
-                    (F.col("entity_id") == str(entity_id))
-                    & F.col("feature_id").isin(list(wanted_ids))
+        with self._lock:
+            self._requests += 1
+            self._sync()
+            by_name = {
+                f.name: f
+                for f in self.registry.list_features(entity_type=entity_type)
+                if f.name in feature_names
+            }
+            key = self._cache_key(entity_type, entity_id, feature_names)
+            cached = self._cache.get(key)
+            if cached is not None:
+                vec = FeatureVector(**cached)
+                vec.cache_hit = True
+                vec.retrieved_at = _utcnow()
+            else:
+                vec = self._read_index(str(entity_id), entity_type, feature_names, by_name)
+                self._cache.put(
+                    key,
+                    {
+                        "entity_id": vec.entity_id,
+                        "entity_type": vec.entity_type,
+                        "features": vec.features,
+                        "timestamps": vec.timestamps,
+                        "freshness": vec.freshness,
+                    },
                 )
-                .collect()
-            )
+        self._mask_denied(vec, by_name, user_id, user_roles)
+        vec.latency_ms = (time.monotonic() - t0) * 1000
+        self._record_latency(vec.latency_ms)
+        return vec
+
+    def _read_index(
+        self, entity_id: str, entity_type: str, feature_names: list[str], by_name: dict
+    ) -> FeatureVector:
+        rows = self._online_index().rows_for(entity_id) if by_name else {}
         now = _utcnow()
         features: dict[str, Any] = {}
         timestamps: dict[str, datetime | None] = {}
         fresh: dict[str, str] = {}
-        found = {}
-        for r in rows:
-            feature = wanted_ids[r["feature_id"]]
-            found[feature.name] = r
         for name in feature_names:
             feature = by_name.get(name)
-            r = found.get(name)
-            if feature is None or r is None:
+            r = rows.get(feature.feature_id) if feature is not None else None
+            if r is None:
                 # null-fill path (ref :520-527)
                 features[name] = None
                 timestamps[name] = None
@@ -266,8 +357,8 @@ class FeatureServer:
             else:
                 fresh[name] = "expired"
         self._stale_served += sum(1 for v in fresh.values() if v != "fresh")
-        vec = FeatureVector(
-            entity_id=str(entity_id),
+        return FeatureVector(
+            entity_id=entity_id,
             entity_type=entity_type,
             features=features,
             timestamps=timestamps,
@@ -275,19 +366,26 @@ class FeatureServer:
             retrieved_at=now,
             cache_hit=False,
         )
-        self._cache.put(
-            key,
-            {
-                "entity_id": vec.entity_id,
-                "entity_type": vec.entity_type,
-                "features": vec.features,
-                "timestamps": vec.timestamps,
-                "freshness": vec.freshness,
-            },
-        )
-        vec.latency_ms = (time.monotonic() - t0) * 1000
-        self._record_latency(vec.latency_ms)
-        return vec
+
+    def _mask_denied(
+        self,
+        vec: FeatureVector,
+        by_name: dict,
+        user_id: str | None,
+        user_roles: list[str] | None,
+    ) -> None:
+        """Null the PHI features the caller may not read.  New dicts, so
+        the cached vector the LRU shares with ``vec`` stays whole."""
+        denied = []
+        for name, feature in by_name.items():
+            try:
+                self.registry._check_access(feature, user_id, user_roles)
+            except PermissionError:
+                denied.append(name)
+        if denied:
+            vec.features = {**vec.features, **dict.fromkeys(denied)}
+            vec.timestamps = {**vec.timestamps, **dict.fromkeys(denied)}
+            vec.freshness = {**vec.freshness, **dict.fromkeys(denied, "expired")}
 
     # -- offline path (ref :290-353, OP-17) -------------------------------
 
@@ -431,17 +529,28 @@ class FeatureServer:
         timestamp: datetime | None = None,
     ) -> None:
         """Dual write: append to the offline (long) store via the registry,
-        invalidate online caches (ref :410-455).  The online table is
-        re-derived from the system of record — online/offline consistency
-        by construction."""
+        then patch each written row into the online index and drop the
+        entity's LRU entries (ref :410-455).  The index keeps exactly what a
+        rebuild from the system of record would hold; on an exact
+        (event, created, seq) tie it is dropped and rebuilt instead."""
         ts = timestamp or _utcnow()
-        for name, value in features.items():
-            feature = self.registry.get_feature_by_name(name, entity_type=entity_type)
-            self.registry.ingest_feature_value(
-                feature.feature_id, entity_id, value, event_timestamp=ts
-            )
-        self._cache.invalidate_entity(f"{entity_type}:{entity_id}:")
-        self.invalidate_online_cache()
+        with self._lock:
+            self._sync()
+            try:
+                for name, value in features.items():
+                    feature = self.registry.get_feature_by_name(name, entity_type=entity_type)
+                    row = self.registry.ingest_feature_value(
+                        feature.feature_id, entity_id, value, event_timestamp=ts
+                    )
+                    self._version += 1
+                    if self._index is None:
+                        continue
+                    if self._index.patch(row):
+                        self._index_patches += 1
+                    else:
+                        self._drop_index("tie")
+            finally:
+                self._cache.invalidate_entity(f"{entity_type}:{entity_id}:")
 
     # -- metrics (ref :111-133, :481-493, OP-22..25) -----------------------
 
@@ -462,23 +571,31 @@ class FeatureServer:
             "avg_latency_ms": sum(lat) / len(lat) if lat else 0.0,
             "p99_latency_ms": p99,
             "stale_features_served": self._stale_served,
+            # online index: builds, rows the builds loaded, written rows
+            # patched in place
+            "online_index_builds": self._index_builds,
+            "online_index_rows": self._index_rows,
+            "online_index_patches": self._index_patches,
         }
 
     def reset_metrics(self) -> None:
         """Drop-in alias for the reference's API (feature_server.py:
-        reset_metrics): zero the request/latency/staleness counters and
-        the cache hit/miss tallies."""
+        reset_metrics): zero the request/latency/staleness counters, the
+        cache hit/miss tallies and the online index counters."""
         self._requests = 0
+        self._index_builds = 0
+        self._index_rows = 0
+        self._index_patches = 0
         self._stale_served = 0
         self._latencies = []
         self._cache.hits = 0
         self._cache.misses = 0
 
     def freshness_report(self, now: datetime | None = None) -> DataFrame:
-        """OP-47: freshness classification over the whole online table —
-        a plan, not a loop (when() CASE per SURVEY.md OP-36)."""
+        """OP-47: freshness classification over the whole latest-value
+        table — a plan, not a loop (when() CASE per SURVEY.md OP-36)."""
         now = now or _utcnow()
-        return self._online_latest().select(
+        return self._latest().select(
             "feature_id",
             "entity_id",
             "event_timestamp",

@@ -766,3 +766,128 @@ def test_dsir_weights_invariants(spark, corpus, nparts, tmp_path_factory):
         ).collect()
     }
     assert stored == base
+
+
+# online index: one feature per value type the index must carry back
+# exactly; the float64 feature is fed Python ints, the embedding a mix
+_INDEX_FEATURES = {
+    "n_int": ("int64", st.integers(-(2**40), 2**40)),
+    "n_float": ("float64", st.integers(-1000, 1000)),
+    "flag": ("bool", st.booleans()),
+    "label": ("string", st.text(max_size=4)),
+    "when": ("timestamp", st.datetimes(datetime(2000, 1, 1), datetime(2030, 1, 1))),
+    "codes": ("array_string", st.lists(st.text(max_size=3), max_size=3)),
+    "emb": (
+        "embedding",
+        st.lists(
+            st.one_of(st.integers(-5, 5), st.floats(-1e3, 1e3, allow_nan=False)),
+            min_size=2,
+            max_size=2,
+        ),
+    ),
+}
+
+# (how, (feature, value), entity 0..2, event hour 0..3): hours collide on
+# purpose, so writes land at equal and older event times than the incumbent
+index_ops = st.lists(
+    st.tuples(
+        st.sampled_from(["write", "ingest", "bulk"]),
+        st.one_of(*[st.tuples(st.just(n), s) for n, (_, s) in _INDEX_FEATURES.items()]),
+        st.integers(0, 2),
+        st.integers(0, 3),
+    ),
+    min_size=1,
+    max_size=6,
+)
+
+
+def _same(a, b) -> bool:
+    """Equal values of the same Python type, elementwise for lists."""
+    if type(a) is not type(b):
+        return False
+    if isinstance(a, list):
+        return len(a) == len(b) and all(_same(x, y) for x, y in zip(a, b))
+    return a == b
+
+
+@given(ops=index_ops)
+@example(ops=[
+    ("write", ("n_int", 5), 0, 2),
+    ("write", ("n_int", 6), 0, 2),  # equal event time: the later write wins
+    ("write", ("n_int", 1), 0, 1),  # older than the incumbent: ignored
+    ("ingest", ("emb", [1, 2.5]), 0, 3),
+    ("bulk", ("label", "x"), 1, 3),
+    ("write", ("label", "y"), 1, 3),
+])
+@SETTINGS
+def test_online_index_matches_latest_per_key(spark, tmp_path_factory, ops):
+    """After every step of a random interleaving of server writes, direct
+    registry ingests and bulk ingests, each touched entity's online read
+    equals a from-scratch latest_per_key over the value store (values,
+    Python types, timestamps); a patched row reads back identically after
+    the index is dropped and rebuilt."""
+    from feature_store_healthcare_spark.registry import (
+        SLOT_FOR,
+        VALUES_SCHEMA,
+        FeatureRegistry,
+        FeatureSchema,
+        FeatureSource,
+        FeatureStatus,
+        FeatureValueType,
+    )
+    from feature_store_healthcare_spark.serving import FeatureServer
+
+    reg = FeatureRegistry(spark, storage_dir=str(tmp_path_factory.mktemp("online_index")))
+    feats = {}
+    for name, (vtype, _) in _INDEX_FEATURES.items():
+        vt = FeatureValueType(vtype)
+        feats[name] = reg.register_feature(
+            name=name,
+            schema=FeatureSchema(name=name, value_type=vt, entity_type="patient",
+                                 embedding_dim=2 if name == "emb" else None),
+            source=FeatureSource(),
+            owner="t",
+            status=FeatureStatus.ACTIVE,
+        )
+    srv = FeatureServer(reg)
+    names = list(_INDEX_FEATURES)
+    touched: list[str] = []
+    for step, (how, (name, value), ent, hour) in enumerate(ops):
+        entity, ts, f = f"p{ent}", BASE + timedelta(hours=hour), feats[name]
+        if how == "write":
+            srv.write_features(entity, "patient", {name: value}, timestamp=ts)
+        elif how == "ingest":
+            reg.ingest_feature_value(f.feature_id, entity, value, event_timestamp=ts)
+        else:
+            row = {n: None for n in VALUES_SCHEMA.fieldNames()}
+            slot = SLOT_FOR[f.schema.value_type]
+            row.update(feature_id=f.feature_id, feature_name=name, entity_type="patient",
+                       entity_id=entity, event_timestamp=ts, created_timestamp=BASE,
+                       seq=1000 + step)
+            row[slot] = [float(x) for x in value] if name == "emb" else (
+                float(value) if name == "n_float" else value)
+            reg.ingest_values_df(spark.createDataFrame([tuple(row.values())], VALUES_SCHEMA))
+        if entity not in touched:
+            touched.append(entity)
+        want = {
+            (r.feature_id, r.entity_id): r
+            for r in latest_per_key(reg.values_df(), ["feature_id", "entity_id"],
+                                    "event_timestamp",
+                                    tiebreak=["created_timestamp", "seq"]).collect()
+        }
+        for e in touched:
+            vec = srv.get_online_features(e, "patient", names)
+            for n in names:
+                r = want.get((feats[n].feature_id, e))
+                exp = (None, None) if r is None else (
+                    r[SLOT_FOR[feats[n].schema.value_type]], r["event_timestamp"])
+                got = (vec.features[n], vec.timestamps[n])
+                assert _same(got[0], exp[0]) and _same(got[1], exp[1]), (step, e, n, got, exp)
+    patched = {e: srv._online_index().rows_for(e) for e in touched}
+    srv.invalidate_online_cache()
+    rebuilt = {e: srv._online_index().rows_for(e) for e in touched}
+    for e in touched:
+        assert patched[e].keys() == rebuilt[e].keys()
+        for fid, row in patched[e].items():
+            assert row.keys() == rebuilt[e][fid].keys()
+            assert all(_same(row[c], rebuilt[e][fid][c]) for c in row), (row, rebuilt[e][fid])
